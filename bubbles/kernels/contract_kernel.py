@@ -177,32 +177,17 @@ def contract_subset_edges(
     )
 
 
-def make_contract_kernel(boundary_bc, min_cluster_size: int):
-    """``applyInPandas`` wrapper; ``boundary_bc`` is a Spark broadcast
-    of the frozenset of cross-edge endpoint ids."""
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        k, a, b, ww = contract_subset_edges(
-            pdf["src"].to_numpy(np.int64),
-            pdf["dst"].to_numpy(np.int64),
-            pdf["weight"].to_numpy(np.float64),
-            boundary_bc.value,
-            min_cluster_size,
-        )
-        return pd.DataFrame({"kind": k, "a": a, "b": b, "w": ww})
-
-    return kernel
-
-
 # level-1 output tagged with the producing leaf subset, so the
 # recursive (level-2) pass can map retained rows to their genealogy
-# bin with one broadcast join
-CONTRACT_TAGGED_SCHEMA = "kind int, a long, b long, w double, subset_id long"
+# bin with one broadcast join; the single-level path ignores the tag
+CONTRACT_TAGGED_SCHEMA = CONTRACT_SCHEMA + ", subset_id long"
 
 
 def make_contract_kernel_tagged(boundary_bc, min_cluster_size: int):
-    """v1 contraction wrapper that carries the leaf ``subset_id`` on
-    every output row (recursive-contraction level 1). Dispatched per
+    """``applyInPandas`` wrapper for level 1 of the contraction (both
+    the single-level and the recursive path); ``boundary_bc`` is a
+    Spark broadcast of the frozenset of cross-edge endpoint ids. It
+    carries the leaf ``subset_id`` on every output row. Dispatched per
     HASH BIN, not per subset: pandas-group dispatch scales with the
     subset count (957k leaf subsets at 40M points cost ~150 s of pure
     dispatch when grouped per subset — the same disease the exact-leaf
@@ -328,7 +313,8 @@ def make_bin_contract_kernel(boundary_bc, min_cluster_size: int):
 
 
 # ---------------------------------------------------------------------------
-# v2: chain-coalescing contraction (opt-in via MRHDBSCAN(coalesce_chains=True))
+# v2: chain-coalescing contraction (level 2 of the recursive contraction,
+# through contract_bin)
 #
 # v1 retains one hub edge + one virtual vertex PER MERGE EVENT along any
 # spine whose running mass is >= min_cluster_size — for a cap-sized leaf
@@ -545,21 +531,3 @@ def contract_subset_edges_v2(
         np.concatenate([np.asarray(out_w, np.float64), self_w.astype(np.float64)]),
         np.concatenate([np.asarray(out_w2, np.float64), detach]),
     )
-
-
-def make_contract_kernel_v2(boundary_bc, min_cluster_size: int):
-    """``applyInPandas`` wrapper for the chain-coalescing contraction;
-    ``boundary_bc`` broadcasts the frozenset of cross-edge endpoint
-    ids (same contract as v1's wrapper)."""
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        k, a, b, ww, ww2 = contract_subset_edges_v2(
-            pdf["src"].to_numpy(np.int64),
-            pdf["dst"].to_numpy(np.int64),
-            pdf["weight"].to_numpy(np.float64),
-            boundary_bc.value,
-            min_cluster_size,
-        )
-        return pd.DataFrame({"kind": k, "a": a, "b": b, "w": ww, "w2": ww2})
-
-    return kernel

@@ -463,8 +463,9 @@ def build_hierarchy(
     its contribution is credit − mass·(1/birth) instead of
     mass·(1/W − 1/birth) — exactly the sum of the per-event terms the
     un-coalesced graph would have produced (up to float re-grouping,
-    which is why the coalesced path is opt-in and differential-tested
-    with allclose, not bit-equality).
+    which is why the coalesced path — level 2 of the recursive
+    contraction — is differential-tested with allclose, not
+    bit-equality).
 
     ``vertex_weights`` is all-ones for the point-level hierarchy and
     the bubble cardinalities ``nB`` for the bubble-level one

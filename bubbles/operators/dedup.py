@@ -207,10 +207,10 @@ def minhash_lsh_pairs(
         )
         # pairs from each bucket's sorted member array in one pass
         # instead of a self-join (round 11, guide §2.3): the id_a <
-        # id_b filter is free (sorted array, j > i). NULL ids sort
-        # first, so a NULL can only ever appear as id_a — the
-        # isNotNull filter reproduces the old self-join's NULL
-        # rejection (a NULL < x predicate is never true) (ADVICE r11).
+        # id_b filter is free (sorted array, j > i). collect_list
+        # drops NULLs, so no NULL id ever enters __ids and no pair
+        # carries one — the old self-join's NULL rejection (a NULL < x
+        # predicate is never true) holds without a filter.
         return (
             grouped.select(
                 F.explode(
@@ -222,7 +222,6 @@ def minhash_lsh_pairs(
                 ).alias("__p")
             )
             .select("__p.id_a", "__p.id_b")
-            .filter(F.col("id_a").isNotNull())
             .distinct()
         )
     # uncapped: a viral bucket would make collect_list unbounded —
@@ -230,7 +229,8 @@ def minhash_lsh_pairs(
     # checkpoint=True: buckets feeds BOTH join sides, whose subplans
     # differ, so Catalyst would re-execute the whole shingle-explode +
     # digest + min-agg pipeline (75M intermediate rows at 500k docs)
-    # per side — measured 4x the query (A/B in tools/minhash_ab.py).
+    # per side — measured 4x the query (A/B recorded in SCALE.md's
+    # minhash_lsh_pairs scaling row).
     buckets = band_buckets(
         sig, num_hashes, band_size, None, id_col, checkpoint=True
     )

@@ -31,10 +31,14 @@ aggregation — the corpus is scanned exactly once for bigrams plus
 once for the vocab size.  Scoring shuffles on the bigram string
 (high-cardinality, near-uniform — no skew salting needed; AQE
 broadcasts the count tables when they fit).  The single-row vocab
-relation rides a broadcast nested-loop join, never a driver collect,
-so building the plan launches no Spark job.  int64 micro-units hold
-up to ~9e12 per-token inverse probabilities (ctx + V up to ~9e12 —
-about a 10-trillion-token corpus); past that, pass ``micro=1``.
+relation rides a broadcast nested-loop join, never a driver collect.
+``bigram_lm_score`` and ``dsir_weights`` run their training jobs at
+call time: each materializes its corpus bigram counts with an eager
+``localCheckpoint`` and counts them to pick the join strategy, so the
+returned scoring frame is lazy but the training is already done.
+int64 micro-units hold up to ~9e12 per-token inverse probabilities
+(ctx + V up to ~9e12 — about a 10-trillion-token corpus); past that,
+pass ``micro=1``.
 
 Reference parity: the reference engine has no LM surface; this is a
 training-data-pipeline extension (task brief: text analysis / quality

@@ -553,9 +553,9 @@ class MRHDBSCANModel:
 
     def hierarchy_at(self, eps) -> DataFrame:
         """Per-point labels at one or more dendrogram levels — the
-        "cut the dendrogram at ε" query, WITHOUT the n×levels matrix,
-        and therefore available under recursive contraction where
-        ``hierarchy_levels`` refuses (round 9). ``eps`` is a single
+        "cut the dendrogram at ε" query, WITHOUT the n×levels matrix;
+        under recursive contraction ``hierarchy_levels`` delegates to
+        it over the writer's own level set. ``eps`` is a single
         distance or a sequence of them (round 10): a multi-level query
         replays the durable pieces ONCE — one driver-side label pass
         per level over the bounded reduced graph, ONE broadcast join
@@ -990,7 +990,6 @@ class MRHDBSCAN:
         id_col: str = "point_id",
         global_mode: str = "contracted",
         dim: int | None = None,
-        coalesce_chains: bool = False,
         auto_widen_samples: bool = True,
         recursive_contraction: bool | str = "auto",
         checkpoint_dir: str | None = None,
@@ -1005,17 +1004,9 @@ class MRHDBSCAN:
         # hierarchy build — bounds the driver input to ~O(n/mcl +
         # cross-bin edges) instead of O(retained events) (SCALE.md
         # "distributed structure pass"). 'auto' enables it past
-        # _RECURSIVE_MIN_POINTS fitted points; constraints and
-        # coalesce_chains fall back to the single-level path.
+        # _RECURSIVE_MIN_POINTS fitted points; constraints fall back
+        # to the single-level path.
         self.recursive_contraction = recursive_contraction
-        # chain-coalescing contraction (contract_kernel v2): collapses
-        # runs of sub-mcl attachments along >=mcl spines into chunks
-        # with pre-aggregated stability credits — shrinks the driver's
-        # retained-event input by ~an order of magnitude at scale.
-        # Opt-in: stabilities drift by float re-grouping ulps vs the
-        # default path (allclose-differential-tested), and constraints
-        # fall back to the per-event kernel.
-        self.coalesce_chains = coalesce_chains
         self.min_pts = min_pts
         self.min_cluster_size = min_cluster_size
         self.sample_fraction = sample_fraction
@@ -1124,7 +1115,6 @@ class MRHDBSCAN:
                 "seed": self.seed,
                 "max_iterations": self.max_iterations,
                 "global_mode": self.global_mode,
-                "coalesce_chains": self.coalesce_chains,
                 "auto_widen_samples": self.auto_widen_samples,
                 "recursive_contraction": self.recursive_contraction,
                 # presence only (pair content is not hashed): a
@@ -1551,40 +1541,16 @@ class MRHDBSCAN:
                     self.recursive_contraction == "auto"
                     and sum(leaf_size.values()) >= _RECURSIVE_MIN_POINTS
                 )
-            ) and constr is None and not self.coalesce_chains and cross_edges is not None
-            if (
-                self.recursive_contraction is True
-                and not use_recursive
-                and (constr is not None or self.coalesce_chains)
-            ):
+            ) and constr is None and cross_edges is not None
+            if self.recursive_contraction is True and constr is not None:
                 import warnings
 
-                blockers = [
-                    b
-                    for b, on in (
-                        ("constraints", constr is not None),
-                        ("coalesce_chains", bool(self.coalesce_chains)),
-                    )
-                    if on
-                ]
                 warnings.warn(
                     "recursive_contraction=True downgraded to the "
                     "single-level contraction: the recursive pass does "
-                    f"not support {'/'.join(blockers)}",
+                    "not support constraints",
                     RuntimeWarning,
                     stacklevel=3,
-                )
-            if use_recursive:
-                return self._global_step_recursive(
-                    spark,
-                    leaf_edges,
-                    cross_edges,
-                    iteration,
-                    parent_of,
-                    leaf_size,
-                    tick=_tick,
-                    n_subsets=n_leaf_subsets,
-                    cut=_cut,
                 )
             return self._global_step_contracted(
                 spark,
@@ -1592,6 +1558,7 @@ class MRHDBSCAN:
                 cross_edges.drop("creator") if cross_edges is not None else None,
                 iteration,
                 constr,
+                genealogy=(parent_of, leaf_size) if use_recursive else None,
                 tick=_tick,
                 n_subsets=n_leaf_subsets,
                 cut=_cut,
@@ -1665,6 +1632,7 @@ class MRHDBSCAN:
         cross_edges,
         iteration,
         constraints=None,
+        genealogy=None,
         tick=lambda phase: None,
         n_subsets: int | None = None,
         cut=None,
@@ -1676,63 +1644,86 @@ class MRHDBSCAN:
         builds the hierarchy over retained events + cross edges only,
         and per-point labels/noise/GLOSH come back through ONE
         broadcast join against the distributed membership relation —
-        no O(n) collect anywhere."""
+        no O(n) collect anywhere.
+
+        ``genealogy=(parent_of, leaf_size)`` adds level 2, the
+        recursive contraction (``_contract_level2``): the level-1
+        retained events are re-contracted per genealogy bin before the
+        driver build, which bounds the driver input to O(n/mcl +
+        cross-bin edges) rows instead of O(retained events)."""
         from bubbles.kernels.contract_kernel import (
-            CONTRACT2_SCHEMA,
-            CONTRACT_SCHEMA,
-            make_contract_kernel,
-            make_contract_kernel_v2,
+            CONTRACT_TAGGED_SCHEMA,
+            make_contract_kernel_tagged,
         )
+
+        import pyarrow as pa
 
         if cross_edges is not None:
             # driver-bounded: one row per inter-cluster edge (O(#bubbles))
             cpdf = cross_edges.toArrow().to_pandas()
         else:
             cpdf = pd.DataFrame({"src": [], "dst": [], "weight": []})
-        # constraints need per-event retained vertices for endpoint
-        # mapping — the coalescing path falls back to the v1 kernel
-        coalesce = self.coalesce_chains and not constraints
         boundary = frozenset(map(int, cpdf["src"])) | frozenset(
             map(int, cpdf["dst"])
         )
         bc = spark.sparkContext.broadcast(boundary)
         par = spark.sparkContext.defaultParallelism
+        # explicit width pin: the contraction replay is CPU-bound and
+        # must not be AQE-coalesced into one task. Hash-bin dispatch:
+        # pandas-group cost must scale with bins (~2x cores, but no
+        # wider than ~2x the subset count — empty Python tasks still
+        # pay the dispatch floor), never with the leaf-subset count
+        # (957k at 40M points — per-subset grouping measured ~150 s of
+        # dispatch); the kernel loops member subsets inside each group.
+        # Hash placement (vs LPT) is fine here: contraction work is
+        # O(E log E) per subset, far flatter than the leaf kernel's
+        # O(c^2).
         width = 2 * (par if n_subsets is None else min(par, max(1, n_subsets)))
-        kernel = (
-            make_contract_kernel_v2(bc, self.min_cluster_size)
-            if coalesce
-            else make_contract_kernel(bc, self.min_cluster_size)
-        )
+        # place each hash bin in its own partition via Murmur3
+        # representatives (as the leaf-kernel stage does): a raw
+        # pmod(hash) bin value would itself be re-hashed by the
+        # exchange and collide, leaving some tasks with 2-3 bins and
+        # others empty
+        creps = _partition_reps(width)
         phase1 = (
-            # explicit width pin for the same reason as the leaf-kernel
-            # stage: the contraction replay is CPU-bound per subset and
-            # must not be AQE-coalesced into one task — but no wider
-            # than ~2x the subset count (empty Python tasks still pay
-            # the dispatch floor)
-            leaf_edges.repartition(width, "subset_id")
-            .groupBy("subset_id")
+            leaf_edges.withColumn(
+                "__cbin",
+                F.element_at(
+                    F.array(*[F.lit(int(r)) for r in creps]),
+                    (F.pmod(F.xxhash64("subset_id"), F.lit(width)) + 1).cast(
+                        "int"
+                    ),
+                ),
+            )
+            .repartition(width, "__cbin")
+            .groupBy("__cbin")
             .applyInPandas(
-                kernel,
-                schema=CONTRACT2_SCHEMA if coalesce else CONTRACT_SCHEMA,
+                make_contract_kernel_tagged(bc, self.min_cluster_size),
+                schema=CONTRACT_TAGGED_SCHEMA,
             )
         )
         phase1 = _cut_or_local(phase1, "global_contract", cut)
         tick("global contract checkpoint")
-        member_cols = [
+        membership = phase1.filter(F.col("kind") == 0).select(
             F.col("a").alias("point_id"),
             F.col("b").alias("rep_id"),
             F.col("w").alias("core_distance"),
-        ]
-        if coalesce:
-            # per-point detach weight (NaN = inherits the
-            # representative's driver-assigned noise level)
-            member_cols.append(F.col("w2").alias("detach"))
-        membership = phase1.filter(F.col("kind") == 0).select(*member_cols)
+        )
+        reduced, m2 = phase1, None
+        if genealogy is not None:
+            reduced, cpdf, m2 = self._contract_level2(
+                spark, phase1, cpdf, *genealogy, tick=tick, cut=cut
+            )
         # Arrow collect: the reduced-event relation is the one driver
         # materialization that scales with retained events (5.5M rows
         # at 6M points / mcl=2000) — row-pickle collect measured 45 s
         # vs ~5 s on the Arrow path
-        red = phase1.filter(F.col("kind") > 0).toArrow().to_pandas()
+        red = (
+            reduced.filter(F.col("kind") > 0)
+            .select("kind", "a", "b", "w")
+            .toArrow()
+            .to_pandas()
+        )
         tick(f"global reduced collect ({len(red)} rows)")
         e1 = red[red["kind"] == 1]
         src = np.concatenate(
@@ -1748,7 +1739,8 @@ class MRHDBSCAN:
         # edge (an n=1 subset has a representative but no MST edge,
         # degenerate-input KeyError otherwise); they must still exist
         # in the hierarchy as isolated noise
-        v2_ids = red[red["kind"] == 2]["a"].to_numpy(np.int64)
+        v2 = red[red["kind"] == 2]
+        v2_ids = v2["a"].to_numpy(np.int64)
         verts = np.unique(np.concatenate([src, dst, v2_ids]))
         # vectorized global-id -> local-index remap: verts is sorted
         # and every endpoint is present, so searchsorted IS the lookup
@@ -1757,13 +1749,12 @@ class MRHDBSCAN:
         lu = np.searchsorted(verts, src)
         lv = np.searchsorted(verts, dst)
         vw = np.ones(len(verts))
-        v2 = red[red["kind"] == 2]
-        vw[np.searchsorted(verts, v2["a"].to_numpy(np.int64))] = v2[
-            "w"
-        ].to_numpy(np.float64)
+        vw[np.searchsorted(verts, v2_ids)] = v2["w"].to_numpy(np.float64)
+        # kind-3 chunk stability credits (level 2's chain-coalescing
+        # kernel only)
+        k3 = red[red["kind"] == 3]
         vertex_credit = None
-        k3 = red[red["kind"] == 3] if coalesce else red.iloc[0:0]
-        if coalesce and len(k3):
+        if len(k3):
             vertex_credit = np.full(len(verts), np.nan)
             vertex_credit[
                 np.searchsorted(verts, k3["a"].to_numpy(np.int64))
@@ -1803,8 +1794,6 @@ class MRHDBSCAN:
         eps_max = np.fromiter(
             (min_death[int(c)] for c in res.last_cluster), np.float64, len(verts)
         )
-        import pyarrow as pa
-
         # ship via an Arrow table: createDataFrame(pandas) falls back to
         # row pickling when the caller session leaves
         # arrow.pyspark.enabled at its Spark-4 default (false) — at 6M
@@ -1819,6 +1808,19 @@ class MRHDBSCAN:
                 }
             )
         )
+        if m2 is None:
+            n_reps = len(verts)
+            rep_df = rep_df.withColumn("detach", F.lit(None).cast("double"))
+        else:
+            # per-level-1-rep relation: broadcast-join the tiny level-2
+            # table over the distributed level-1 rep -> level-2 rep map
+            # (no shuffle); its cheap count on a checkpoint sizes the
+            # join below
+            n_reps = m2.count()
+            rep_df = m2.join(
+                F.broadcast(rep_df.withColumnRenamed("rep_id", "rep2")),
+                on="rep2",
+            ).drop("rep2")
         # broadcast only while the retained-vertex relation is actually
         # small; past ~2M rows (≈80 MB) a broadcast stresses every
         # executor's memory and a shuffle join is the right plan. In
@@ -1826,30 +1828,24 @@ class MRHDBSCAN:
         # so the cheap path stays cheap much longer.
         is_local = spark.sparkContext.master.startswith("local")
         bcast_cap = 8_000_000 if is_local else 2_000_000
-        if len(verts) <= bcast_cap:
+        if n_reps <= bcast_cap:
             rep_df = F.broadcast(rep_df)
         joined = membership.join(rep_df, on="rep_id")
         labels_df = joined.select("point_id", "label")
         # GLOSH (HDBSCANStar.java:653-686): contracted members share
         # their representative's noise level and deepest cluster
-        # exactly. Chain-coalesced members (coalesce_chains=True) share
-        # the chunk's flat label and eps_max — exact because chunks
-        # live inside PURE subtrees where no global event can land
-        # inside their span (contract_kernel v2 docstring) — but carry
-        # their TRUE per-point detach weight as the noise level.
-        if coalesce:
-            nl = F.when(
-                F.isnan("detach") | F.col("detach").isNull(),
-                F.col("noise_level"),
-            ).otherwise(F.col("detach"))
-        else:
-            nl = F.col("noise_level")
+        # exactly. Level-2 chain-coalesced members share the chunk's
+        # flat label and eps_max — exact because chunks live inside
+        # PURE subtrees where no global event can land inside their
+        # span (contract_kernel v2 docstring) — but carry their TRUE
+        # per-point detach weight as the noise level (NULL/NaN =
+        # inherits the representative's).
+        nl = F.when(
+            F.col("detach").isNull() | F.isnan("detach"), F.col("noise_level")
+        ).otherwise(F.col("detach"))
         scores_df = joined.select(
             "point_id",
-            F.when(
-                nl > 0,
-                F.lit(1.0) - F.col("eps_max") / nl,
-            )
+            F.when(nl > 0, F.lit(1.0) - F.col("eps_max") / nl)
             .otherwise(F.lit(0.0))
             .alias("score"),
             "core_distance",
@@ -1866,97 +1862,63 @@ class MRHDBSCAN:
         )
         model._hier = (res, verts)
         model._membership = membership
+        if m2 is not None:
+            # point -> level-2 representative composition (kept for
+            # model introspection), plus the two durable pieces
+            # hierarchy_at(eps) — and hierarchy_levels through it —
+            # replays levels from: point -> level-1 rep (exact
+            # trajectory sharing) and level-1 rep -> (level-2 chunk,
+            # exact detach weight)
+            model._membership = membership.join(
+                m2.select("rep_id", "rep2"), on="rep_id"
+            ).select("point_id", F.col("rep2").alias("rep_id"), "core_distance")
+            model._membership_l1 = membership
+            model._l2 = m2
+            model._levels_mode = "recursive"
         model._spark = spark
         model._fit_params = {"min_pts": self.min_pts, "metric": self.distance}
         return model
 
     # ------------------------------------------------------------------
-    def _global_step_recursive(
+    def _contract_level2(
         self,
         spark,
-        leaf_edges: DataFrame,
-        cross_edges: DataFrame,
-        iteration,
+        phase1: DataFrame,
+        cpdf: pd.DataFrame,
         parent_of: dict[int, int],
         leaf_size: dict[int, int],
-        tick=lambda phase: None,
-        n_subsets: int | None = None,
-        cut=None,
-    ) -> MRHDBSCANModel:
-        """Recursive (two-level) contraction — the distributed
-        structure pass SCALE.md's global-step analysis calls for past
-        ~10M points. Level 1 contracts each leaf subset's merge forest
-        as in ``_global_step_contracted`` but tags rows with the
-        producing subset; level 2 groups the retained events by
-        genealogy bin (whole subtrees of the subset-recursion tree, so
-        cross edges created inside a bin's subtree stay local), joins
-        in the bin's intra-bin cross edges, and re-contracts with the
+        tick,
+        cut,
+    ):
+        """Level 2 of the contraction — the distributed structure pass
+        SCALE.md's global-step analysis calls for past ~10M points.
+        Groups the level-1 retained events by genealogy bin (whole
+        subtrees of the subset-recursion tree, so cross edges created
+        inside a bin's subtree stay local), joins in the bin's
+        intra-bin cross edges, and re-contracts with the
         chain-coalescing kernel against the tiny cross-BIN boundary.
-        The driver then builds the exact hierarchy over second-level
-        retained events + cross-bin edges only — O(n/mcl + cross-bin)
-        rows instead of O(retained events) — and labels/noise/GLOSH
-        come back through rep-space joins (one broadcast join over the
-        level-1 retained relation + the usual membership join), never
-        an O(n) collect."""
+
+        Returns ``(phase2, cross_bin, m2)``: the level-2 output
+        relation, the cross edges left for the driver, and
+        ``m2(rep_id, rep2, detach)`` mapping each level-1
+        representative to its level-2 one with its exact detach
+        weight (NaN = none)."""
         from bubbles.kernels.contract_kernel import (
             CONTRACT2_SCHEMA,
-            CONTRACT_TAGGED_SCHEMA,
             make_bin_contract_kernel,
-            make_contract_kernel_tagged,
         )
 
         import pyarrow as pa
-
-        cpdf = cross_edges.toArrow().to_pandas()  # creator,src,dst,weight
-        boundary1 = frozenset(map(int, cpdf["src"])) | frozenset(
-            map(int, cpdf["dst"])
-        )
-        bc1 = spark.sparkContext.broadcast(boundary1)
-        par = spark.sparkContext.defaultParallelism
-        # hash-bin dispatch: pandas-group cost must scale with bins
-        # (~2x cores), never with the leaf-subset count (957k at 40M
-        # points — per-subset grouping measured ~150 s of dispatch);
-        # the kernel loops member subsets inside each group. Hash
-        # placement (vs LPT) is fine here: contraction work is
-        # O(E log E) per subset, far flatter than the leaf kernel's
-        # O(c^2).
-        nbins1 = 2 * (par if n_subsets is None else min(par, max(1, n_subsets)))
-        # place each hash bin in its own partition via Murmur3
-        # representatives (as the leaf-kernel stage does): a raw
-        # pmod(hash) bin value would itself be re-hashed by the
-        # exchange and collide, leaving some tasks with 2-3 bins and
-        # others empty
-        creps = _partition_reps(nbins1)
-        phase1 = (
-            leaf_edges.withColumn(
-                "__cbin",
-                F.element_at(
-                    F.array(*[F.lit(int(r)) for r in creps]),
-                    (F.pmod(F.xxhash64("subset_id"), F.lit(nbins1)) + 1).cast(
-                        "int"
-                    ),
-                ),
-            )
-            .repartition(nbins1, "__cbin")
-            .groupBy("__cbin")
-            .applyInPandas(
-                make_contract_kernel_tagged(bc1, self.min_cluster_size),
-                schema=CONTRACT_TAGGED_SCHEMA,
-            )
-        )
-        phase1 = _cut_or_local(phase1, "global_contract_l1", cut)
-        tick("global contract checkpoint (level 1)")
-        membership = phase1.filter(F.col("kind") == 0).select(
-            F.col("a").alias("point_id"),
-            F.col("b").alias("rep_id"),
-            F.col("w").alias("core_distance"),
-        )
 
         # endpoint -> leaf subset, via one broadcast join over the
         # level-1 membership rows (result is O(#cross edges), tiny);
         # Arrow both ways — python row lists measured seconds at 1.25M
         # endpoints
-        eps = np.fromiter(boundary1, np.int64, len(boundary1))
+        eps = np.unique(
+            np.concatenate(
+                [cpdf["src"].to_numpy(np.int64), cpdf["dst"].to_numpy(np.int64)]
+            )
+        )
         ep_df = spark.createDataFrame(pa.table({"a": pa.array(eps, pa.int64())}))
         sub_pdf = (
             phase1.filter(F.col("kind") == 0)
@@ -1972,11 +1934,10 @@ class MRHDBSCAN:
         src_sub = cpdf["src"].map(sub_map)
         dst_sub = cpdf["dst"].map(sub_map)
         known = src_sub.notna() & dst_sub.notna()
-        n_bins_target = int(os.environ.get("SPARK_GRAFT_L2_BINS", "0")) or 2 * par
         leaf_bin, n_bins = _genealogy_bins(
             parent_of,
             leaf_size,
-            n_bins_target,
+            2 * spark.sparkContext.defaultParallelism,
             affinity=list(
                 zip(
                     src_sub[known].astype(np.int64),
@@ -2012,9 +1973,7 @@ class MRHDBSCAN:
         src_bin = src_sub.map(bin_map)
         dst_bin = dst_sub.map(bin_map)
         intra = src_bin.notna() & dst_bin.notna() & (src_bin == dst_bin)
-        xsrc = cpdf["src"][~intra].to_numpy(np.int64)
-        xdst = cpdf["dst"][~intra].to_numpy(np.int64)
-        xw = cpdf["weight"][~intra].to_numpy(np.float64)
+        cross_bin = cpdf.loc[~intra, ["src", "dst", "weight"]]
         n_intra = int(intra.sum())
         if n_intra:
             retained = retained.unionByName(
@@ -2042,10 +2001,13 @@ class MRHDBSCAN:
                 )
             )
         tick(
-            f"global cross-edge routing ({len(xsrc)} cross-bin / "
+            f"global cross-edge routing ({len(cross_bin)} cross-bin / "
             f"{len(cpdf)} total)"
         )
-        bc2 = spark.sparkContext.broadcast(frozenset(xsrc) | frozenset(xdst))
+        bc2 = spark.sparkContext.broadcast(
+            frozenset(map(int, cross_bin["src"]))
+            | frozenset(map(int, cross_bin["dst"]))
+        )
         phase2 = (
             retained.repartition(n_bins, "__gbin")
             .groupBy("__gbin")
@@ -2061,107 +2023,7 @@ class MRHDBSCAN:
             F.col("b").alias("rep2"),
             F.col("w2").alias("detach"),
         )
-        red = phase2.filter(F.col("kind") > 0).toArrow().to_pandas()
-        tick(f"global reduced collect ({len(red)} rows)")
-        e1 = red[red["kind"] == 1]
-        src = np.concatenate([e1["a"].to_numpy(np.int64), np.asarray(xsrc, np.int64)])
-        dst = np.concatenate([e1["b"].to_numpy(np.int64), np.asarray(xdst, np.int64)])
-        wts = np.concatenate([e1["w"].to_numpy(np.float64), np.asarray(xw, np.float64)])
-        v2 = red[red["kind"] == 2]
-        verts = np.unique(
-            np.concatenate([src, dst, v2["a"].to_numpy(np.int64)])
-        )
-        lu = np.searchsorted(verts, src)
-        lv = np.searchsorted(verts, dst)
-        vw = np.ones(len(verts))
-        vw[np.searchsorted(verts, v2["a"].to_numpy(np.int64))] = v2[
-            "w"
-        ].to_numpy(np.float64)
-        k3 = red[red["kind"] == 3]
-        vertex_credit = None
-        if len(k3):
-            vertex_credit = np.full(len(verts), np.nan)
-            vertex_credit[
-                np.searchsorted(verts, k3["a"].to_numpy(np.int64))
-            ] = k3["w"].to_numpy(np.float64)
-        res = hk.build_hierarchy(
-            lu, lv, wts, vw, self.min_cluster_size, vertex_credit=vertex_credit
-        )
-        tick(f"global hierarchy ({len(verts)} verts)")
-        min_death = hk.cluster_min_death(res)
-        eps_max = np.fromiter(
-            (min_death[int(c)] for c in res.last_cluster), np.float64, len(verts)
-        )
-
-        rep2_df = spark.createDataFrame(
-            pa.table(
-                {
-                    "rep2": pa.array(verts, pa.int64()),
-                    "label": pa.array(res.labels.astype(np.int64), pa.int64()),
-                    "noise_level": pa.array(res.noise_level, pa.float64()),
-                    "eps_max": pa.array(eps_max, pa.float64()),
-                }
-            )
-        )
-        # per-rep1 relation: broadcast-join the tiny level-2 table over
-        # the distributed level-1 membership — no shuffle; chunk
-        # members carry their true detach weight as the noise level
-        # (contract_kernel v2 exactness contract)
-        rep1_df = m2.join(F.broadcast(rep2_df), on="rep2").select(
-            "rep_id",
-            "label",
-            F.when(
-                F.isnan("detach") | F.col("detach").isNull(),
-                F.col("noise_level"),
-            )
-            .otherwise(F.col("detach"))
-            .alias("noise_level"),
-            "eps_max",
-        )
-        # same broadcast policy as the single-level path, sized by the
-        # level-1 retained-vertex count (cheap count on a checkpoint)
-        is_local = spark.sparkContext.master.startswith("local")
-        bcast_cap = 8_000_000 if is_local else 2_000_000
-        if m2.count() <= bcast_cap:
-            rep1_df = F.broadcast(rep1_df)
-        joined = membership.join(rep1_df, on="rep_id")
-        labels_df = joined.select("point_id", "label")
-        scores_df = joined.select(
-            "point_id",
-            F.when(
-                F.col("noise_level") > 0,
-                F.lit(1.0) - F.col("eps_max") / F.col("noise_level"),
-            )
-            .otherwise(F.lit(0.0))
-            .alias("score"),
-            "core_distance",
-        )
-        all_edges = leaf_edges.drop("subset_id").unionByName(
-            cross_edges.drop("creator")
-        )
-        model = MRHDBSCANModel(
-            labels=labels_df,
-            cluster_tree=_tree_df(spark, res),
-            outlier_scores=scores_df,
-            mst_edges=all_edges,
-            n_iterations=iteration,
-        )
-        model._hier = (res, verts)
-        # point -> level-2 representative composition (kept for model
-        # introspection; the level-matrix writer itself is refused —
-        # see hierarchy_levels' recursive-mode contract)
-        model._membership = membership.join(
-            m2.select("rep_id", "rep2"), on="rep_id"
-        ).select("point_id", F.col("rep2").alias("rep_id"), "core_distance")
-        # the two durable pieces hierarchy_at(eps) replays a single
-        # level from: point -> level-1 rep (exact trajectory sharing)
-        # and level-1 rep -> (level-2 chunk, exact detach weight)
-        model._membership_l1 = membership
-        model._l2 = m2.select("rep_id", "rep2", "detach")
-        model._levels_mode = "recursive"
-        model._spark = spark
-        model._fit_params = {"min_pts": self.min_pts, "metric": self.distance}
-        return model
+        return phase2, cross_bin, m2
 
 
 def _tree_df(spark, res) -> DataFrame:

@@ -393,3 +393,68 @@ def test_hierarchy_on_arbitrary_graphs(seed):
     assert canon_tree(fast.clusters) == canon_tree(slow_clusters)
     assert np.allclose(fast.noise_level, slow_noise)
     assert ari(fast.last_cluster, slow_last) == pytest.approx(1.0)
+
+
+def test_contract_kernel_tagged_loops_subsets_of_one_bin():
+    # level 1 of the global contraction groups by hash bin, so one
+    # pandas group holds several leaf subsets. Each subset's tagged
+    # rows must equal contract_subset_edges on that subset alone,
+    # whatever the row order inside the bin (tie-free weights, so the
+    # per-subset result does not depend on row order either).
+    from types import SimpleNamespace
+
+    import pandas as pd
+
+    from bubbles.kernels.contract_kernel import (
+        contract_subset_edges,
+        make_contract_kernel_tagged,
+    )
+
+    rng = np.random.default_rng(5)
+    mcl = 5
+    parts = []
+    for sid, n in ((3, 40), (11, 1), (17, 25), (42, 60)):
+        ids = sid * 1000 + np.arange(n, dtype=np.int64)
+        parent = np.array([rng.integers(0, i) for i in range(1, n)], np.int64)
+        # random spanning tree (weights in [1, 2)) + one self edge per
+        # point below every tree weight, as core distances are
+        parts.append(
+            pd.DataFrame(
+                {
+                    "subset_id": np.full(2 * n - 1, sid, np.int64),
+                    "src": np.concatenate([ids[1:], ids]),
+                    "dst": np.concatenate([ids[parent], ids]),
+                    "weight": np.concatenate(
+                        [rng.uniform(1.0, 2.0, n - 1), rng.uniform(0.1, 0.9, n)]
+                    ),
+                }
+            )
+        )
+    pdf = pd.concat(parts, ignore_index=True)
+    boundary = frozenset({3005, 3017, 42000, 42031, 42059})
+    kernel = make_contract_kernel_tagged(SimpleNamespace(value=boundary), mcl)
+
+    def rows(k, a, b, w):
+        return sorted(zip(map(int, k), map(int, a), map(int, b), map(float, w)))
+
+    expected = {}
+    for part in parts:
+        sid = int(part["subset_id"].iloc[0])
+        expected[sid] = rows(
+            *contract_subset_edges(
+                part["src"].to_numpy(np.int64),
+                part["dst"].to_numpy(np.int64),
+                part["weight"].to_numpy(np.float64),
+                boundary,
+                mcl,
+            )
+        )
+    for seed in (0, 1):
+        out = kernel(pdf.sample(frac=1.0, random_state=seed))
+        assert sorted(set(out["subset_id"])) == sorted(expected)
+        for sid, want in expected.items():
+            g = out[out["subset_id"] == sid]
+            assert rows(g["kind"], g["a"], g["b"], g["w"]) == want
+    empty = kernel(pdf.iloc[0:0])
+    assert len(empty) == 0
+    assert list(empty.columns) == ["kind", "a", "b", "w", "subset_id"]

@@ -53,9 +53,9 @@ def main():
 
     # round-6 chosen config. mpts/mcs from the round-5 sweep
     # (tools/skin_sweep.py); sample_fraction raised 0.2 -> 0.5 after
-    # the seed-42 diagnosis (tools/skin_diag.py + tools/skin_seeds.py,
-    # QUALITY_r6): at k=0.2 some bubble samples open a density dip
-    # inside the nonskin class that EOM decisively selects (3-4
+    # the seed-42 diagnosis (QUALITY_r6.json "seed42_diagnosis", with
+    # tools/skin_seeds.py): at k=0.2 some bubble samples open a density
+    # dip inside the nonskin class that EOM decisively selects (3-4
     # clusters, ARI 0.24-0.40 on 3/10 seeds; contracted == driver
     # oracle, so the engine is exact — it's sampling variance). At
     # k=0.5 all 10 seeds score ARI 0.63-0.70 (mean 0.667) vs the
