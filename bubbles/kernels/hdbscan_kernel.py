@@ -10,8 +10,9 @@ top-down tied-edge removal (``HDBSCANStar.java:208-492``) but runs in
 O(E α(V)) instead of O(V·levels).
 
 This kernel is (a) the exact leaf path for subsets ≤ max_local_size,
-run per-group via applyInPandas, and (b) the driver-side global
-dendrogram step over the merged edge set.
+run per-group via applyInPandas, (b) the driver-side global
+dendrogram step over the merged edge set, and (c) the exact kNN of
+broadcast predict (``nearest_euclidean``).
 """
 
 from __future__ import annotations
@@ -26,9 +27,15 @@ import numpy as np
 # ---------------------------------------------------------------------------
 
 
+def _norm_rows(diff: np.ndarray) -> np.ndarray:
+    """The euclidean row arithmetic, defined once: the per-row
+    ``_rows_euclidean`` and the blocked ``nearest_euclidean`` both
+    apply it to a C-contiguous difference, so they round identically."""
+    return np.sqrt(np.einsum("ij,ij->i", diff, diff))
+
+
 def _rows_euclidean(X: np.ndarray, x: np.ndarray) -> np.ndarray:
-    d = X - x
-    return np.sqrt(np.einsum("ij,ij->i", d, d))
+    return _norm_rows(X - x)
 
 
 def _rows_manhattan(X: np.ndarray, x: np.ndarray) -> np.ndarray:
@@ -67,6 +74,130 @@ ROW_DISTANCES = {
     "cosine": _rows_cosine,
     "pearson": _rows_pearson,
 }
+
+
+# Byte budget of one query block of ``nearest_euclidean``: the screen
+# matrix (block rows × reference rows doubles) and each exact-finish
+# chunk (pairs × dim doubles) stay within it at every reference size.
+_KNN_BLOCK_BYTES = 4 << 20
+_UNIT_ROUNDOFF = 2.0 ** -53
+_SUBNORMAL_MIN = 2.0 ** -1074
+
+
+def nearest_euclidean(
+    mat: np.ndarray, ids: np.ndarray, X: np.ndarray, min_pts: int
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Exact euclidean kNN of every query row of ``X`` against the
+    reference ``mat``: returns ``(j, dist, core_x)`` where ``j`` is
+    the reference row index of the nearest fitted point (exact ties
+    keep the smallest ``ids`` value), ``dist`` its distance, and
+    ``core_x`` the (min_pts-1)-th smallest distance (0 when
+    min_pts <= 1, the largest distance when min_pts-1 > m). Every
+    value is bit-identical to the per-row rule
+    ``_rows_euclidean(mat, x)`` + min + smallest-id tie +
+    ``np.partition``, whatever the blocking.
+
+    Per block of query rows (a byte-bounded working set,
+    ``_KNN_BLOCK_BYTES``):
+
+    1. Screen: one BLAS product of ``[x, 1]`` with ``[-2s, |s|²]``
+       gives ``g = |s|² - 2x·s`` for every reference row ``s`` (the row
+       constant ``|x|²`` is dropped).
+    2. Upper bound: the columns are split into ``G = min(m, 32k)``
+       strided groups, ``k = max(1, min_pts-1)``; the k-th smallest of
+       the per-group minima is the screened value of k DISTINCT
+       columns, so the k-th nearest row lies within it.
+    3. Candidates: every column with ``g <= bound + margin``.
+    4. Exact finish: only the candidate pairs are recomputed with
+       ``_norm_rows(mat[j] - x)``, the row formula, and one
+       ``lexsort(ids, dist, row)`` orders each row's candidates.
+
+    Margin derivation (u = 2^-53, M = |x|² + max|s|², γ_n = nu/(1-nu),
+    first order in u). Let ĝ be the computed screen, g its exact value,
+    q = fl(Σ(s-x)²) the exact formula before its square root and D²
+    the true squared distance; D² <= (|x|+|s|)² <= 2M.
+
+    * |ĝ - g| <= E1 = (3d+2)uM: the computed |s|² carries γ_d|s|²,
+      and the (d+1)-term product γ_{d+1}(|s|² + 2|x||s|) <= 2γ_{d+1}M
+      in any summation order (BLAS blocking and FMA included; scaling
+      by -2 is exact).
+    * |q - D²| <= E2 = 2γ_{d+2}M: every summand (s-x)² is nonnegative
+      and carries three roundings, the sum d-1 more.
+    * fl(√q_j) <= fl(√q_l) implies q_j <= (1+5u)q_l (correctly rounded,
+      monotone square root), at most 10uM more than q_l.
+
+    If row j is needed (its exact distance is <= the k-th smallest),
+    some column l among the k group-minimum columns has
+    fl(√q_j) <= fl(√q_l); chaining the three bounds through
+    ĝ_l <= bound gives ĝ_j <= bound + 2·E1 + 2·E2 + 10uM
+    = bound + (10d + 22)uM. The margin used is
+    ``12(d+4)·(uM + 2^-1074)``: the slack covers second-order terms and
+    the rounding of M itself, and the subnormal term covers underflowed
+    products (absolute error below 2^-1074 per operation). A column is
+    dropped only when ``g > threshold`` holds, so a NaN from
+    overflowed squares keeps every column of its row. The margin is
+    load-bearing: near-ties between different rows are decided by ulps
+    the screen cannot see (tests/test_kernel.py pins a case).
+    """
+    m, d = mat.shape
+    n = X.shape[0]
+    k = max(1, min_pts - 1)
+    groups = min(m, 32 * k)
+    sq = np.einsum("ij,ij->i", mat, mat)
+    sq_max = float(sq.max())
+    # [-2s, |s|²] and [x, 1], built in place: one reference-sized copy
+    screen_rhs = np.empty((m, d + 1))
+    np.multiply(mat, -2.0, out=screen_rhs[:, :d])
+    screen_rhs[:, d] = sq
+    screen_rhs = screen_rhs.T
+    screen_lhs = np.ones((n, d + 1))
+    screen_lhs[:, :d] = X
+    margin_scale = 12.0 * (d + 4)
+    rows_per_block = max(1, _KNN_BLOCK_BYTES // (8 * m))
+    pairs_per_chunk = max(1, _KNN_BLOCK_BYTES // (8 * max(d, 1)))
+
+    near = np.empty(n, dtype=np.int64)
+    near_d = np.empty(n, dtype=np.float64)
+    core_x = np.zeros(n, dtype=np.float64)
+    for a in range(0, n, rows_per_block):
+        xb = X[a:a + rows_per_block]
+        nb = xb.shape[0]
+        if k >= m:
+            # every reference row is needed (the k-th is the largest)
+            rows = np.repeat(np.arange(nb), m)
+            cols = np.tile(np.arange(m), nb)
+        else:
+            g = screen_lhs[a:a + nb] @ screen_rhs
+            q, r = divmod(m, groups)
+            gmin = g[:, : q * groups].reshape(nb, q, groups).min(axis=1)
+            if r:
+                np.minimum(gmin[:, :r], g[:, q * groups:], out=gmin[:, :r])
+            bound = np.partition(gmin, k - 1, axis=1)[:, k - 1]
+            xsq = np.einsum("ij,ij->i", xb, xb)
+            thr = bound + margin_scale * (
+                _UNIT_ROUNDOFF * (xsq + sq_max) + _SUBNORMAL_MIN
+            )
+            drop = g > thr[:, None]
+            rows, cols = np.divmod(
+                np.flatnonzero(np.logical_not(drop, out=drop)), m
+            )
+        dist = np.empty(rows.shape[0], dtype=np.float64)
+        for c in range(0, rows.shape[0], pairs_per_chunk):
+            sl = slice(c, c + pairs_per_chunk)
+            dist[sl] = _norm_rows(mat[cols[sl]] - xb[rows[sl]])
+        order = np.lexsort((ids[cols], dist, rows))
+        counts = np.bincount(rows, minlength=nb)
+        starts = np.cumsum(counts) - counts
+        first = order[starts]
+        near[a:a + nb] = cols[first]
+        near_d[a:a + nb] = dist[first]
+        if min_pts <= 1:
+            continue
+        if min_pts - 1 <= m:
+            core_x[a:a + nb] = dist[order[starts + (min_pts - 2)]]
+        else:
+            core_x[a:a + nb] = dist[order[starts + counts - 1]]
+    return near, near_d, core_x
 
 
 def pairwise_distances(X: np.ndarray, metric: str = "euclidean") -> np.ndarray:

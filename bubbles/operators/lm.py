@@ -205,9 +205,13 @@ def dsir_weights(
     at sf0.1), so the two builds are submitted from a 2-thread pool
     (guide §2.6: overlap independent jobs; job submission is
     thread-safe and FIFO scheduling back-fills the first job's tail
-    with the second job's tasks).
+    with the second job's tasks). Each build runs under
+    ``inheritable_thread_target``, so its jobs carry the caller's job
+    group and description like the rest of the call.
     """
     from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.util import inheritable_thread_target
 
     def _t():
         return bigram_lm_score(
@@ -223,8 +227,9 @@ def dsir_weights(
             F.col(id_col), F.col("inv_avg_micro").alias("base_inv_avg")
         )
 
+    inherit = inheritable_thread_target(docs.sparkSession)
     with ThreadPoolExecutor(max_workers=2) as pool:
-        ft, fb = pool.submit(_t), pool.submit(_b)
+        ft, fb = pool.submit(inherit(_t)), pool.submit(inherit(_b))
         t, b = ft.result(), fb.result()
     return t.join(b, id_col).select(
         F.col(id_col),

@@ -32,11 +32,17 @@ engine's distance-level conventions:
 
 Execution shape (the 100 TB story): the reference relation is joined
 once (labels + core distances + tree levels onto the fitted features),
-collected into ONE numpy broadcast, and every new point is scored by a
-vectorized Arrow kernel in a single ``mapInPandas`` pass — zero
-shuffles, no window, no join on the new-point side, so the SAME plan
-runs unchanged over a Structured Streaming source (stream scoring =
-this operator on a readStream frame; test_predict pins stream==batch).
+collected with ``toArrow`` and decoded column-wise into ONE numpy
+broadcast (non-finite reference features are refused there), and
+every new point is scored in a single ``mapInPandas`` pass. Euclidean
+batches run an exact BLAS-screened kNN over byte-bounded row blocks
+(``kernels.hdbscan_kernel.nearest_euclidean``); the other metrics keep
+the per-row distance loop; the membership rule is vectorized over the
+batch. NULL, NaN and inf query rows come back as noise (label 0,
+nearest -1, mr_dist inf), like the index paths. Zero shuffles, no
+window, no join on the new-point side, so the SAME plan runs unchanged
+over a Structured Streaming source (stream scoring = this operator on
+a readStream frame; test_predict pins stream==batch).
 The broadcast is size-gated like every other broadcast in this repo:
 beyond ``max_reference_rows`` the call refuses and tells the caller to
 sample the reference (per-cluster stratified sampling keeps the
@@ -57,31 +63,136 @@ _PREDICT_SCHEMA = (
 )
 
 
-def _make_predict_kernel(bc, min_pts: int, metric: str):
-    """Arrow kernel: per-row kNN against the broadcast reference + the
-    membership rule above. Ties on the nearest distance keep the
-    smallest fitted id (deterministic, the repo-wide tie convention) —
-    selected by an O(m) min + masked argmin, NOT a full lexsort of the
-    reference axis (the old O(m log m) sort dominated per-row cost at
-    the 500k-row cap).
+def _decode_features(pdf, dim: int):
+    """(X, ok): the batch's ``features`` as one (n, dim) float64 matrix
+    and the mask of rows that can be scored. NULL, NaN and inf rows
+    are not scorable (the caller returns them as noise, like the index
+    paths); a row whose length is not the reference dimension is a
+    caller error and raises, naming its ``point_id``."""
+    import numpy as np
 
-    Why per-row and not a (block × reference) distance matrix: the
-    reference matrix is small enough to stay cache-resident (500k × 64
-    doubles = 256 MB worst-case, 1.6 MB at the bench shapes), so the
-    row pass streams it at LLC speed; a blocked 3D diff tensor
-    (block·m·dim doubles) spills to DRAM and measured 2–12× SLOWER at
-    every tested shape on this class of host (50k×4: 721 µs/row
-    per-row vs 1.7–8.5 ms/row blocked; see SCALEBENCH
-    predict_broadcast for the shipping per-point cost). The
-    ||a||²-2ab+||b||² GEMM shortcut is faster still but loses the
-    exact 0 self-distance the tie rule and the pinned goldens rely
-    on."""
+    feats = pdf["features"]
+    present = feats.notna().to_numpy()
+    X = np.full((len(pdf), dim), np.nan)
+    if present.any():
+        given = feats[present]
+        try:
+            got = np.vstack(given.to_list())
+        except ValueError:
+            got = None
+        if got is None or got.shape[1] != dim:
+            lengths = np.array([len(v) for v in given])
+            bad = int(np.flatnonzero(lengths != dim)[0])
+            pid = int(pdf["point_id"][present].iloc[bad])
+            raise ValueError(
+                f"point_id {pid}: features has length {lengths[bad]}, "
+                f"but the prediction reference has dimension {dim}"
+            )
+        X[present] = got
+    return X, np.isfinite(X).all(axis=1)
+
+
+def _reference_arrays(tbl):
+    """The broadcast payload ``(ids, mat, labels, core, birth, death)``
+    decoded column-wise from the reference's Arrow table: ``features``
+    by list-flatten + reshape, NULL birth/death levels as NaN. Refuses
+    an empty reference and NULL, ragged or non-finite reference
+    features, whose distances would poison every query."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    n = tbl.num_rows
+    if n == 0:
+        raise ValueError(
+            "empty prediction reference: fitted_points shares no "
+            "point_id with model.labels"
+        )
+    feats = tbl.column("features").combine_chunks()
+    if feats.null_count:
+        raise ValueError(
+            f"prediction reference has {feats.null_count} rows with NULL "
+            f"features"
+        )
+    lengths = pc.list_value_length(feats).to_numpy()
+    if lengths.min() != lengths.max():
+        raise ValueError(
+            f"prediction reference features have lengths "
+            f"{lengths.min()}..{lengths.max()}; they must share one length"
+        )
+    mat = (
+        feats.flatten()
+        .to_numpy(zero_copy_only=False)
+        .astype(np.float64, copy=False)
+        .reshape(n, -1)
+    )
+    bad = int((~np.isfinite(mat).all(axis=1)).sum())
+    if bad:
+        raise ValueError(
+            f"prediction reference has {bad} rows with non-finite "
+            f"features (NaN or inf); fit and predict on finite data"
+        )
+
+    def col(name, dtype):
+        return (
+            tbl.column(name)
+            .to_numpy(zero_copy_only=False)
+            .astype(dtype, copy=False)
+        )
+
+    return (
+        col("point_id", np.int64),
+        mat,
+        col("label", np.int64),
+        col("core_distance", np.float64),
+        col("birth_level", np.float64),
+        col("death_level", np.float64),
+    )
+
+
+def _make_predict_kernel(bc, min_pts: int, metric: str):
+    """Arrow kernel: exact kNN of each row against the broadcast
+    reference, then the membership rule above, vectorized over the
+    batch. Ties on the nearest distance keep the smallest fitted id
+    (deterministic, the repo-wide tie convention).
+
+    Euclidean rows go through ``nearest_euclidean``: a BLAS screen per
+    byte-bounded row block, a rigorous rounding margin, and an exact
+    recompute of the few surviving pairs with the shared row formula.
+    Its output is bit-identical to the per-row rule (the exact 0
+    self-distance included), which plain ``|x|²-2x·s+|s|²`` GEMM is
+    not. The other metrics keep the per-row ``ROW_DISTANCES`` loop: it
+    is the only exact form for cosine and pearson, whose formulas are
+    not symmetric in their two arguments."""
     import numpy as np
     import pandas as pd
 
-    from bubbles.kernels.hdbscan_kernel import ROW_DISTANCES
+    from bubbles.kernels.hdbscan_kernel import ROW_DISTANCES, nearest_euclidean
 
     dist_rows = ROW_DISTANCES[metric]
+
+    def nearest_per_row(mat, ids, X):
+        n = X.shape[0]
+        near = np.empty(n, dtype=np.int64)
+        near_d = np.empty(n, dtype=np.float64)
+        core_x = np.zeros(n, dtype=np.float64)
+        for i in range(n):
+            d = dist_rows(mat, X[i])
+            # nearest fitted point; exact distance ties keep the
+            # smallest id — O(m) scan, no sort
+            cand = np.flatnonzero(d == d.min())
+            j = cand[0] if cand.size == 1 else cand[ids[cand].argmin()]
+            near[i], near_d[i] = j, d[j]
+            # core_x: the (min_pts-1)-th nearest fitted neighbor —
+            # i.e. the min_pts-th smallest after prepending a virtual
+            # self-0 — so self-predicting a fitted point reproduces its
+            # fitted core distance
+            if min_pts <= 1:
+                continue
+            if min_pts - 1 <= d.shape[0]:
+                core_x[i] = np.partition(d, min_pts - 2)[min_pts - 2]
+            else:
+                core_x[i] = d.max(initial=0.0)
+        return near, near_d, core_x
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         ids, mat, labels, core, birth, death = bc.value
@@ -89,46 +200,34 @@ def _make_predict_kernel(bc, min_pts: int, metric: str):
             n = len(pdf)
             if n == 0:
                 continue
-            X = np.array(
-                [np.asarray(v, dtype=np.float64) for v in pdf["features"]]
-            )
+            X, ok = _decode_features(pdf, mat.shape[1])
             out_label = np.zeros(n, dtype=np.int64)
             out_strength = np.zeros(n, dtype=np.float64)
             out_nearest = np.full(n, -1, dtype=np.int64)
             out_dmr = np.full(n, np.inf, dtype=np.float64)
-            for i in range(n):
-                d = dist_rows(mat, X[i])
-                # nearest fitted point; exact distance ties keep the
-                # smallest id — O(m) scan, no sort
-                cand = np.flatnonzero(d == d.min())
-                j = cand[0] if cand.size == 1 else cand[ids[cand].argmin()]
-                out_nearest[i] = ids[j]
-                # core_x: the (min_pts-1)-th nearest fitted neighbor —
-                # i.e. the min_pts-th smallest after prepending a
-                # virtual self-0 — so self-predicting a fitted point
-                # reproduces its fitted core distance
-                if min_pts <= 1:
-                    core_x = 0.0
-                elif min_pts - 1 <= d.shape[0]:
-                    core_x = float(np.partition(d, min_pts - 2)[min_pts - 2])
-                else:
-                    core_x = float(d.max(initial=0.0))
-                d_mr = max(float(d[j]), float(core[j]), core_x)
-                out_dmr[i] = d_mr
-                lbl = int(labels[j])
-                if lbl == 0:
-                    continue  # nearest fitted point is noise
-                b, dth = float(birth[j]), float(death[j])
-                member = np.isnan(b) or d_mr <= b
-                if not member:
-                    continue
-                out_label[i] = lbl
-                if np.isnan(b) or np.isnan(dth) or b <= dth:
-                    out_strength[i] = 1.0
-                else:
-                    out_strength[i] = float(
-                        np.clip((b - d_mr) / (b - dth), 0.0, 1.0)
+            if ok.any():
+                if metric == "euclidean":
+                    j, near_d, core_x = nearest_euclidean(
+                        mat, ids, X[ok], min_pts
                     )
+                else:
+                    j, near_d, core_x = nearest_per_row(mat, ids, X[ok])
+                d_mr = np.maximum(np.maximum(near_d, core[j]), core_x)
+                lbl, b, dth = labels[j], birth[j], death[j]
+                # fitted noise predicts noise; otherwise member iff the
+                # attach level is inside the cluster's lifetime (the
+                # root's NaN birth: always)
+                open_b = np.isnan(b)
+                member = (lbl != 0) & (open_b | (d_mr <= b))
+                whole = open_b | np.isnan(dth) | (b <= dth)
+                with np.errstate(divide="ignore", invalid="ignore"):
+                    frac = np.clip((b - d_mr) / (b - dth), 0.0, 1.0)
+                out_label[ok] = np.where(member, lbl, 0)
+                out_strength[ok] = np.where(
+                    member, np.where(whole, 1.0, frac), 0.0
+                )
+                out_nearest[ok] = ids[j]
+                out_dmr[ok] = d_mr
             yield pd.DataFrame(
                 {
                     "point_id": pdf["point_id"].astype(np.int64),
@@ -928,8 +1027,6 @@ def approximate_predict(
         raise ValueError(
             f"index must be 'auto', 'broadcast', 'ivf' or 'lsh', got {index!r}"
         )
-    import numpy as np
-
     spark = new_points.sparkSession
 
     if fitted_points is None:
@@ -1008,26 +1105,7 @@ def approximate_predict(
             f"per-cluster sample of the fitted points instead "
             f"(stratified by model.labels)"
         )
-    rows = ref.collect()
-    if not rows:
-        raise ValueError(
-            "empty prediction reference: fitted_points shares no "
-            "point_id with model.labels"
-        )
-    ids = np.array([r["point_id"] for r in rows], dtype=np.int64)
-    mat = np.array(
-        [np.asarray(r["features"], dtype=np.float64) for r in rows]
-    )
-    labels = np.array([r["label"] for r in rows], dtype=np.int64)
-    core = np.array([r["core_distance"] for r in rows], dtype=np.float64)
-    birth = np.array(
-        [np.nan if r["birth_level"] is None else r["birth_level"] for r in rows],
-        dtype=np.float64,
-    )
-    death = np.array(
-        [np.nan if r["death_level"] is None else r["death_level"] for r in rows],
-        dtype=np.float64,
-    )
+    ids, mat, labels, core, birth, death = _reference_arrays(ref.toArrow())
     bc = spark.sparkContext.broadcast((ids, mat, labels, core, birth, death))
 
     staged = new_points.select(

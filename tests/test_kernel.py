@@ -458,3 +458,109 @@ def test_contract_kernel_tagged_loops_subsets_of_one_bin():
     empty = kernel(pdf.iloc[0:0])
     assert len(empty) == 0
     assert list(empty.columns) == ["kind", "a", "b", "w", "subset_id"]
+
+
+# ---------------------------------------------------------------------------
+# nearest_euclidean: the blocked BLAS-screened kNN of broadcast predict,
+# bit-identical to the per-row rule it replaces.
+# ---------------------------------------------------------------------------
+
+
+def _knn_oracle(mat, ids, X, min_pts):
+    """Per-row rule: ROW_DISTANCES + min + smallest-id tie + partition."""
+    near = np.empty(len(X), dtype=np.int64)
+    near_d = np.empty(len(X))
+    core_x = np.zeros(len(X))
+    for i, x in enumerate(X):
+        d = ROW_DISTANCES["euclidean"](mat, x)
+        cand = np.flatnonzero(d == d.min())
+        j = cand[ids[cand].argmin()]
+        near[i], near_d[i] = j, d[j]
+        if min_pts <= 1:
+            continue
+        if min_pts - 1 <= len(d):
+            core_x[i] = np.partition(d, min_pts - 2)[min_pts - 2]
+        else:
+            core_x[i] = d.max()
+    return near, near_d, core_x
+
+
+def _assert_bitwise(got, want):
+    for g, w, name in zip(got, want, ("index", "distance", "core_x")):
+        assert g.dtype == w.dtype, name
+        assert g.tobytes() == w.tobytes(), (
+            f"{name}: {int((g != w).sum())} of {len(w)} rows differ"
+        )
+
+
+def _knn_cases():
+    rng = np.random.default_rng(5)
+    base = rng.normal(scale=3.0, size=(120, 3))
+    # exact duplicates with shuffled ids: ties must go to the smallest id
+    dup = np.vstack([base, base[:40], base[:10]])
+    dup_ids = rng.permutation(len(dup)).astype(np.int64) * 3 + 11
+    queries = np.vstack([dup, dup[:25] + 1e-9, rng.normal(scale=4.0, size=(40, 3))])
+    yield "self_and_duplicates", dup, dup_ids, queries
+    lattice = np.round(rng.integers(0, 5, size=(200, 3)) * 0.5, 1)
+    lq = np.vstack([lattice, np.round(rng.uniform(-0.5, 2.5, size=(80, 3)) * 4) / 4])
+    yield "rounded_lattice", lattice, np.arange(200, dtype=np.int64), lq
+    for off in (1e6, 1e8):
+        yield (
+            f"offset_{off:g}", base + off, np.arange(120, dtype=np.int64),
+            np.vstack([base, base + rng.normal(scale=1e-3, size=base.shape)]) + off,
+        )
+    yield (
+        "m_is_1", base[:1], np.array([7], dtype=np.int64),
+        np.vstack([base[:1], base[1:30]]),
+    )
+    # 20 reference rows: fewer than the 32·k groups of every min_pts >= 2
+    yield "m_below_group_count", base[:20], np.arange(20, dtype=np.int64)[::-1].copy(), base
+
+
+@pytest.mark.parametrize("case", list(_knn_cases()), ids=lambda c: c[0])
+def test_nearest_euclidean_matches_per_row_oracle(case):
+    from bubbles.kernels.hdbscan_kernel import nearest_euclidean
+
+    _, mat, ids, X = case
+    m = len(mat)
+    for min_pts in sorted({1, 2, 4, m, m + 1, m + 3}):
+        _assert_bitwise(
+            nearest_euclidean(mat, ids, X, min_pts),
+            _knn_oracle(mat, ids, X, min_pts),
+        )
+
+
+def test_nearest_euclidean_independent_of_block_split(monkeypatch):
+    """A row's answer must not depend on which rows share its block
+    (BLAS picks different kernels for 1-row and many-row products),
+    so a retried Spark task with a different batch split agrees."""
+    from bubbles.kernels import hdbscan_kernel as hk
+
+    rng = np.random.default_rng(8)
+    mat = np.round(rng.normal(size=(300, 5)), 2) + 1e4
+    ids = np.arange(300, dtype=np.int64)
+    X = np.vstack([mat[:50], np.round(rng.normal(size=(70, 5)), 2) + 1e4])
+    want = _knn_oracle(mat, ids, X, 4)
+    for rows_per_block in (1, 7, 64, len(X)):
+        monkeypatch.setattr(hk, "_KNN_BLOCK_BYTES", 8 * len(mat) * rows_per_block)
+        _assert_bitwise(hk.nearest_euclidean(mat, ids, X, 4), want)
+        parts = [X[:13], X[13:14], X[14:]]
+        got = [hk.nearest_euclidean(mat, ids, p, 4) for p in parts]
+        _assert_bitwise(tuple(np.concatenate(c) for c in zip(*got)), want)
+
+
+def test_nearest_euclidean_margin_is_load_bearing(monkeypatch):
+    """Self-queries 1e-3 apart at a 1e8 offset: the screen's rounding
+    (|x|²·u ≈ 3 in squared units) dwarfs the 1e-6 squared gaps, so
+    without the margin the screen drops the true 0-distance row."""
+    from bubbles.kernels import hdbscan_kernel as hk
+
+    rng = np.random.default_rng(2)
+    mat = rng.integers(0, 40, size=(400, 3)) * 1e-3 + 1e8
+    ids = np.arange(400, dtype=np.int64)
+    want = _knn_oracle(mat, ids, mat, 2)
+    _assert_bitwise(hk.nearest_euclidean(mat, ids, mat, 2), want)
+    monkeypatch.setattr(hk, "_UNIT_ROUNDOFF", 0.0)
+    monkeypatch.setattr(hk, "_SUBNORMAL_MIN", 0.0)
+    got = hk.nearest_euclidean(mat, ids, mat, 2)
+    assert (got[1] != want[1]).any(), "margin 0 still exact: case too easy"

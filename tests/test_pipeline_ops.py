@@ -2457,6 +2457,35 @@ def test_dsir_weights_orders_by_domain(spark):
         ) // t.loc[did].inv_avg_micro
 
 
+def test_dsir_weights_build_jobs_carry_callers_job_group(spark):
+    """dsir_weights trains its two LMs at call time from a thread pool;
+    those jobs must run under the caller's job group (so it can cancel
+    and attribute them), not as ungrouped jobs of bare pool threads."""
+    from bubbles.operators.lm import dsir_weights
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    target = spark.createDataFrame(
+        [(i, "the cat sat on the mat") for i in range(4)],
+        "doc_id long, text string",
+    )
+    base = spark.createDataFrame(
+        [(i, "der hund lief durch den park") for i in range(4, 12)],
+        "doc_id long, text string",
+    )
+    docs = spark.createDataFrame([(100, "the cat sat")], "doc_id long, text string")
+    ungrouped_before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("dsir-build-group", "dsir_weights LM builds")
+    try:
+        dsir_weights(docs, target, base)
+    finally:
+        sc._jsc.clearJobGroup()
+    grouped = tracker.getJobIdsForGroup("dsir-build-group")
+    stray = set(tracker.getJobIdsForGroup(None)) - ungrouped_before
+    assert len(grouped) >= 2, grouped  # at least one job per LM build
+    assert not stray, f"build jobs outside the caller's group: {stray}"
+
+
 def test_funnel_counts_walk_semantics(spark):
     """Hand-built funnel fixtures: same-instant advancement, steps
     out of order don't count, later re-occurrence rescues the walk,

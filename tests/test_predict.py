@@ -7,7 +7,9 @@ the model relations, (4) the SAME operator over a Structured Streaming
 source produces the batch result (the plan is one broadcast +
 mapInPandas — no shuffle, no window — so stream==batch is a plan
 property, not luck), (5) the broadcast size gate and metric validation
-fail loudly.
+fail loudly, (6) the broadcast input contract: unscorable query rows
+are noise, wrong-length rows and non-finite references raise, and (7)
+the batch kernel equals the per-row rule bit for bit for every metric.
 """
 
 from __future__ import annotations
@@ -263,6 +265,125 @@ def test_predict_reference_cap_and_metric(spark, fitted):
         approximate_predict(
             model, df.withColumn("point_id", df.point_id + 10_000), df,
         )
+
+
+_NOISE = (0, 0.0, -1, float("inf"))
+
+
+@pytest.mark.parametrize(
+    "bad", [None, [float("nan"), 1.0], [1.0, float("inf")]],
+    ids=["null", "nan", "inf"],
+)
+def test_predict_broadcast_unscorable_row_is_noise(spark, fitted, bad):
+    """A NULL, NaN or inf query row comes back as (label 0, strength
+    0, nearest -1, mr_dist inf) — the index paths' contract — and the
+    other rows of its batch are unaffected."""
+    X, df, model = fitted
+    new = to_df(spark, X[:30] + 0.05, ids=np.arange(30))
+    with_bad = new.unionByName(
+        spark.createDataFrame([(777, bad)], "point_id long, features array<double>")
+    ).coalesce(1)
+    got = _collect_pred(approximate_predict(model, df, with_bad, min_pts=4))
+    assert got.pop(777) == _NOISE
+    assert got == _collect_pred(approximate_predict(model, df, new, min_pts=4))
+
+
+def test_predict_broadcast_wrong_length_row_raises(spark, fitted):
+    X, df, model = fitted
+    bad = to_df(spark, X[:5]).unionByName(
+        spark.createDataFrame(
+            [(31, [1.0, 2.0, 3.0])], "point_id long, features array<double>"
+        )
+    )
+    with pytest.raises(Exception, match=r"point_id 31: features has length 3"):
+        approximate_predict(model, df, bad, min_pts=4).collect()
+
+
+def test_predict_broadcast_nonfinite_reference_raises(spark, fitted):
+    """Non-finite fitted features would make every query's distances
+    NaN; the driver refuses them, with their count, before broadcasting."""
+    X, df, model = fitted
+    poisoned = df.withColumn(
+        "features",
+        F.when(
+            F.col("point_id").isin(3, 4),
+            F.array(F.lit(float("nan")), F.lit(0.0)),
+        ).otherwise(F.col("features")),
+    )
+    with pytest.raises(ValueError, match="2 rows with non-finite features"):
+        approximate_predict(model, poisoned, df, min_pts=4)
+
+
+def _per_row_predict(ids, mat, labels, core, birth, death, X, min_pts, metric):
+    """The row-at-a-time predict rule: ROW_DISTANCES, min + smallest-id
+    tie, np.partition for core_x, scalar membership."""
+    from bubbles.kernels.hdbscan_kernel import ROW_DISTANCES
+
+    out = []
+    for x in X:
+        d = ROW_DISTANCES[metric](mat, x)
+        cand = np.flatnonzero(d == d.min())
+        j = cand[ids[cand].argmin()]
+        if min_pts <= 1:
+            core_x = 0.0
+        elif min_pts - 1 <= len(d):
+            core_x = float(np.partition(d, min_pts - 2)[min_pts - 2])
+        else:
+            core_x = float(d.max())
+        d_mr = max(float(d[j]), float(core[j]), core_x)
+        lbl, strength = 0, 0.0
+        b, dth = float(birth[j]), float(death[j])
+        if labels[j] != 0 and (np.isnan(b) or d_mr <= b):
+            lbl = int(labels[j])
+            if np.isnan(b) or np.isnan(dth) or b <= dth:
+                strength = 1.0
+            else:
+                strength = float(np.clip((b - d_mr) / (b - dth), 0.0, 1.0))
+        out.append((lbl, np.round(strength, 9), int(ids[j]), d_mr))
+    return out
+
+
+@pytest.mark.parametrize(
+    "metric", ["euclidean", "manhattan", "chebyshev", "cosine", "pearson"]
+)
+def test_predict_kernel_matches_per_row_rule(metric):
+    """Spark-free: the batch kernel reproduces the per-row rule bit for
+    bit on every column, for every metric and min_pts regime (≤1, ≤m,
+    >m), with ties (duplicates), root members (NaN birth), noise and
+    zero-lifetime clusters in the reference."""
+    from types import SimpleNamespace
+
+    import pandas as pd
+
+    from bubbles.plans.predict import _make_predict_kernel
+
+    rng = np.random.default_rng(4)
+    mat = np.vstack([rng.normal(size=(60, 3)), np.zeros((4, 3))])
+    mat = np.vstack([mat, mat[:10]])
+    m = len(mat)
+    ids = rng.permutation(m).astype(np.int64) + 100
+    labels = rng.integers(0, 5, m).astype(np.int64)
+    core = rng.uniform(0.0, 0.6, m)
+    birth = np.array([np.nan, 1.2, 0.8, np.nan, 0.5])[labels]
+    death = np.array([np.nan, 0.2, 0.8, 0.1, np.nan])[labels]
+    Q = np.vstack([mat[:20], rng.normal(size=(50, 3)), np.zeros((1, 3))])
+    pdf = pd.DataFrame(
+        {"point_id": np.arange(len(Q)), "features": list(Q)}
+    )
+    ref = SimpleNamespace(value=(ids, mat, labels, core, birth, death))
+    for min_pts in (1, 2, 4, m + 2):
+        (got,) = _make_predict_kernel(ref, min_pts, metric)(iter([pdf]))
+        want = _per_row_predict(
+            ids, mat, labels, core, birth, death, Q, min_pts, metric
+        )
+        rows = list(
+            zip(got["label"], got["strength"], got["nearest_fitted_id"], got["mr_dist"])
+        )
+        assert len(rows) == len(want)
+        for i, (g, w) in enumerate(zip(rows, want)):
+            assert g[0] == w[0] and g[2] == w[2], (min_pts, i, g, w)
+            assert np.float64(g[1]).tobytes() == np.float64(w[1]).tobytes()
+            assert np.float64(g[3]).tobytes() == np.float64(w[3]).tobytes()
 
 
 def test_predict_index_path_full_probe_matches_broadcast(spark, fitted):

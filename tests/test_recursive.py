@@ -2,7 +2,7 @@
 
 MRHDBSCAN(recursive_contraction=True) re-contracts the level-1
 retained-event graph per genealogy bin (plans/mrhdbscan.py
-_global_step_recursive + kernels/contract_kernel.py contract_bin)
+_contract_level2 + kernels/contract_kernel.py contract_bin)
 before the driver hierarchy build. Exactness argument: the bin's
 merge forest over (member subsets' retained forests + intra-bin cross
 edges) is the global single-linkage structure restricted to the bin,
